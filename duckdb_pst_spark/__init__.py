@@ -8,9 +8,10 @@ engine}. Here the engine is Spark SQL itself; this package provides
   README/tests exercise (SURVEY.md §2.B), plus large-scale training-data
   pipeline operators (dedup, similarity, text analysis) — all declarative
   DataFrame builders that Catalyst optimizes.
-- ``sources/``     — the PST-shaped source layer (SURVEY.md §2.A semantics:
-  class filter, read_limit, body truncation, attachment gating) over
-  deterministic fixture parquet.
+- ``sources/``     — the PST source layer: a binary [MS-PST] reader behind
+  ``spark.read.format("pst")`` (SURVEY.md §2.A semantics: class filter,
+  read_limit, body truncation, attachment gating), plus error-tolerant
+  CSV/JSONL readers.
 - ``functions/``   — column-level helpers (portable hashing, vector math via
   higher-order functions) that stay JVM-side.
 - ``streaming/``   — Structured Streaming equivalents (windowed aggregation

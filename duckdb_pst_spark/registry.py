@@ -318,7 +318,6 @@ def load_all() -> dict[str, QuerySpec]:
     )
     from duckdb_pst_spark.multimodal import queries as _mm_queries  # noqa: F401
     from duckdb_pst_spark.sources.mspst import queries as _pstbin_queries  # noqa: F401
-    from duckdb_pst_spark.sources import pst_queries  # noqa: F401
     from duckdb_pst_spark.streaming import events as _streaming_events  # noqa: F401
     from duckdb_pst_spark.streaming import stateful as _streaming_stateful  # noqa: F401
 

@@ -206,29 +206,40 @@ def ingest_pst_archive(
     spark: SparkSession,
     out_dir: str,
     *,
-    path_glob: str | None = None,
+    path_glob: str,
     partition_messages_by_class: bool = True,
     **reader_kw,
 ) -> dict[str, str]:
     """Crawl a PST archive (all 8 table functions) into a parquet lake —
-    the batch-ingest pattern the reference's ad-hoc scans imply. Messages
-    are partitioned by message_class so each typed query (notes, tasks,
-    …) prunes to its own directories. Returns table → output path."""
-    from duckdb_pst_spark.sources import pst
+    the batch-ingest pattern the reference's ad-hoc scans imply. Each
+    table is one ``format("pst")`` scan of ``path_glob`` with
+    ``reader_kw`` as reader options (``read_body_size_bytes``,
+    ``read_attachment_body``, …); ``notes`` is skipped, being a subset
+    of ``messages``. Messages are partitioned by message_class so each
+    typed query (notes, tasks, …) prunes to its own directories. Returns
+    function name → output path."""
+    from duckdb_pst_spark.sources.mspst.datasource import register
+    from duckdb_pst_spark.sql import TABLES
 
+    register(spark)
     out: dict[str, str] = {}
-    for name, reader in pst.READERS.items():
-        if name in ("read_pst_notes",):  # subset of read_pst_messages
+    for table in TABLES:
+        if table == "notes":
             continue
-        df = reader(spark, path_glob, **reader_kw)
-        dest = f"{out_dir}/{name.removeprefix('read_pst_')}"
+        df = (
+            spark.read.format("pst")
+            .option("table", table)
+            .options(**reader_kw)
+            .load(path_glob)
+        )
+        dest = f"{out_dir}/{table}"
         part = (
             ["message_class"]
-            if partition_messages_by_class and name == "read_pst_messages"
+            if partition_messages_by_class and table == "messages"
             else None
         )
         export_parquet(df, dest, partition_by=part)
-        out[name] = dest
+        out[f"read_pst_{table}"] = dest
     return out
 
 

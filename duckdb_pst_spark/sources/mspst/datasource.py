@@ -12,11 +12,13 @@ Maps the reference's scan architecture onto the DataSource API
   (A10, function_state.cpp:59-71)
 - named scan parameters (A21): ``read_body_size_bytes``,
   ``read_attachment_body``, ``read_limit``
-- class filter applied at read (A5); Catalyst prunes columns on top (A7)
+- class filter applied at planning, before ``read_limit`` (A5); the
+  ``columns`` option prunes the decode (A7)
 """
 
 from __future__ import annotations
 
+import itertools
 import sys
 
 from pyspark.sql.datasource import (
@@ -302,23 +304,28 @@ class PstReader(DataSourceReader):
         partitions of ``partition_size`` (reference default 4096,
         table_function.hpp:29-30) — one Spark task per bucket, with the
         node list carried in the partition like the reference's
-        ``PSTInputPartition.nodes``. Folders stay one partition per file
-        (16-ish rows). With ``read_limit``, planning stops once enough
-        nodes are covered (A6: the crawl itself is cut short). Paths may
-        be local globs or remote URLs — http(s) range reads / pyarrow
-        filesystems (A2, duckdb_filesystem.cpp:12-36)."""
+        ``PSTInputPartition.nodes``. Typed tables keep only the nids whose
+        message class matches (A5, table_function.cpp:133-175), so
+        ``read_limit`` counts rows of the table. Folders stay one
+        partition per file (16-ish rows). With ``read_limit``, planning
+        stops once enough nodes are covered (A6: the crawl itself is cut
+        short). Paths may be local globs or remote URLs — http(s) range
+        reads / pyarrow filesystems (A2, duckdb_filesystem.cpp:12-36)."""
         from duckdb_pst_spark.sources.mspst.fsio import expand_paths
 
         files = expand_paths(self.path) if self.path else []
         if not files:
-            return [InputPartition((None, None))]
+            return [InputPartition(((None, None),))]
         psize = int(self.options_partition_size)
         limit = int(self.read_limit) if self.read_limit is not None else None
+        want = CLASS_FILTER.get(self.table)
 
-        def plan_one(f):
+        def plan_one(f, need=None):
             """(file, message nids | None-for-folders), or None when the
             file is unreadable — A18 error tolerance
-            (table_function.cpp:228-235): logged and skipped, not fatal."""
+            (table_function.cpp:228-235): logged and skipped, not fatal.
+            ``need`` caps a typed table's class probe at that many hits."""
+            from duckdb_pst_spark.sources.mspst.messaging import class_nids
             from duckdb_pst_spark.sources.mspst.ndb import PstFile, nid_type
 
             try:
@@ -329,10 +336,10 @@ class PstReader(DataSourceReader):
                         for _ in p.nbt:
                             pass
                         return (f, None)
-                    return (
-                        f,
-                        sorted(n for n in p.nbt if nid_type(n) == 0x04),
-                    )
+                    nids = sorted(n for n in p.nbt if nid_type(n) == 0x04)
+                    if want is not None:
+                        nids = class_nids(p, nids, want, need)
+                    return (f, nids)
             except Exception as exc:
                 print(f"pst: skipping unreadable file {f}: {exc}", file=sys.stderr)
                 return None
@@ -352,7 +359,7 @@ class PstReader(DataSourceReader):
             planned_files = []
             seen = 0
             for f in files:
-                r = plan_one(f)
+                r = plan_one(f, None if limit is None else limit - seen)
                 if r is None:
                     continue
                 planned_files.append(r)
@@ -420,6 +427,9 @@ class PstReader(DataSourceReader):
             yield from self._read_entry(entry)
 
     def _read_entry(self, entry):
+        """Rows of one planned (file, nids) entry. Planning already
+        applied the class filter and ``read_limit`` to message nids;
+        folders are capped here, per file."""
         path, nids = entry
         if path is None:
             return
@@ -438,10 +448,9 @@ class PstReader(DataSourceReader):
                 "pst_name": a.display_name,
                 "record_key": a.record_key,
             }
-            limit = int(self.read_limit) if self.read_limit is not None else None
-            n = 0
             if self.table == "folders":
-                rows = a.folders()
+                limit = int(self.read_limit) if self.read_limit is not None else None
+                rows = itertools.islice(a.folders(), limit)
             else:
                 rows = []
                 for nid in nids or []:
@@ -462,15 +471,9 @@ class PstReader(DataSourceReader):
                             f"pst: skipping unparseable node {nid} in {path}: {exc}",
                             file=sys.stderr,
                         )
-            want = CLASS_FILTER.get(self.table)
             for r in rows:
-                if want is not None and not (r.get("message_class") or "").startswith(want):
-                    continue  # A5 class filter
-                if limit is not None and n >= limit:
-                    break
                 full = {**meta, **r}
                 yield tuple(_tupleize(full.get(f)) for f in self.fields)
-                n += 1
         finally:
             a.close()
 

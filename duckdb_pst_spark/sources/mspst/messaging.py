@@ -4,9 +4,9 @@ surface the reference reaches through its SDK's ``pst``/``folder``/
 ``message`` classes and serializes in
 /root/reference/src/row_serializer.cpp.
 
-Row dicts use the reference's output column names (schema.hpp) so the
-Spark source can build the identical DataFrames from either the binary
-reader (this module) or the parquet fixtures.
+Row dicts use the reference's output column names (schema.hpp); the
+Spark DataSource, the SQL views and the ``read_pst_*`` UDTFs all build
+their rows from them.
 """
 
 from __future__ import annotations
@@ -55,6 +55,8 @@ DECODE_STATS = {
 }
 
 _ARCHIVE_META_COLS = frozenset({"pst_path", "pst_name", "record_key"})
+
+PR_MESSAGE_CLASS = 0x001A
 
 PSETID_APPOINTMENT = bytes.fromhex("90da d862 0c45 1b10 98da 0008 2b2a 56c2".replace(" ", ""))
 PSETID_TASK = bytes.fromhex("03200608 0000 0000 c000 0000 0000 0046".replace(" ", ""))
@@ -225,7 +227,7 @@ class PstArchive:
             return s[: max(read_body_size_bytes // 2, 1)]
 
         row = {"node_id": nid, "parent_node_id": e.nid_parent,
-               "message_class": pc.get(0x001A)}
+               "message_class": pc.get(PR_MESSAGE_CLASS)}
         if want("subject"):
             row["subject"] = _clean_subject(pc.get(0x0037))
         if want("body"):
@@ -495,6 +497,28 @@ class PstArchive:
             "member_node_ids": member_ids,
             "one_off_members": [o for o in one_off if o],
         }
+
+
+def class_nids(
+    pst: PstFile, nids: list[int], prefix: str, limit: int | None = None
+) -> list[int]:
+    """The nids whose ``PR_MESSAGE_CLASS`` starts with ``prefix``, in
+    order, stopping after ``limit`` matches — the reference's
+    planning-time class filter (A5, table_function.cpp:133-175; class
+    reader typed_bag.hpp:90-107). Only the class property is probed; a
+    node whose property context fails to parse is left out (A18)."""
+    out: list[int] = []
+    for nid in nids:
+        if limit is not None and len(out) >= limit:
+            break
+        try:
+            e = pst.nbt[nid]
+            cls = ltp.PropertyContext(pst, e.bid_data, e.bid_sub).get(PR_MESSAGE_CLASS)
+        except Exception:
+            continue
+        if (cls or "").startswith(prefix):
+            out.append(nid)
+    return out
 
 
 def _clean_subject(s: str | None) -> str | None:

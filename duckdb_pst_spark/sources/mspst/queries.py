@@ -1,5 +1,5 @@
-"""Registered queries over the BINARY PST reader (SURVEY.md §2.C via the
-real [MS-PST] parser, not the parquet fixtures).
+"""Registered queries over the binary PST reader (SURVEY.md §2.C via the
+[MS-PST] parser).
 
 The oracle for these can't re-read PST (DuckDB here has no PST
 extension), so the golden queries pin the Spark result to literal VALUES
@@ -437,7 +437,7 @@ def q_pstbin_parent_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_pst_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PST ingest (``spark.readStream.format("pst")``) as a
     registered, driver-checkable query — previously test-gated only
-    (tests/test_pst_source.py). Bounded replay of the continuous-mailbox
+    (tests/test_pst_ansi.py). Bounded replay of the continuous-mailbox
     deployment: archive ``a.pst`` lands, an AvailableNow run ingests it
     through the parquet file sink; ``b.pst`` lands late and a SECOND run
     from the SAME checkpoint ingests exactly the new archive (file-log

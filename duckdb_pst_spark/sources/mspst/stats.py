@@ -20,20 +20,17 @@ from __future__ import annotations
 
 import sys
 
-PR_MESSAGE_CLASS = 0x001A
-
 
 def file_count(path: str, table: str = "messages") -> int:
     """Exact row count for one PST file without reading row data.
 
     ``messages``/``folders`` need only the NBT (node-id type bits);
-    typed tables additionally probe the class property per node.  An
-    unreadable file is logged and counted as 0 (A18 error tolerance,
-    table_function.cpp:228-235).
+    typed tables additionally probe the class property per node — the
+    same probe the scan planner runs.  An unreadable file is logged and
+    counted as 0 (A18 error tolerance, table_function.cpp:228-235).
     """
-    from duckdb_pst_spark.sources.mspst import ltp
     from duckdb_pst_spark.sources.mspst.datasource import CLASS_FILTER
-    from duckdb_pst_spark.sources.mspst.messaging import PstArchive
+    from duckdb_pst_spark.sources.mspst.messaging import PstArchive, class_nids
 
     try:
         a = PstArchive(path)
@@ -47,17 +44,7 @@ def file_count(path: str, table: str = "messages") -> int:
         want = CLASS_FILTER.get(table)
         if want is None:  # messages: NBT crawl alone is exact
             return len(nids)
-        n = 0
-        for nid in nids:
-            try:
-                e = a.pst.nbt[nid]
-                pc = ltp.PropertyContext(a.pst, e.bid_data, e.bid_sub)
-                cls = pc.get(PR_MESSAGE_CLASS) or ""
-            except Exception:
-                continue  # unparseable node → not counted (A18)
-            if cls.startswith(want):
-                n += 1
-        return n
+        return len(class_nids(a.pst, nids, want))
     finally:
         a.close()
 

@@ -18,18 +18,18 @@ src/pst_extension.cpp:13-45). Two Spark equivalents are provided:
    read_body_size_bytes, read_attachment_body). UDTF scans evaluate on a
    single executor per call — the SQL-parity convenience path, not the
    100 TB path; use the DataSource/views for scale.
+
+Both run the DataSource's own reader (``PstReader``), so paths, globs,
+per-file error tolerance (A18) and rows are the same on either surface.
 """
 
 from __future__ import annotations
 
-import glob as globmod
+import itertools
 
 from pyspark.sql import SparkSession
 
-from duckdb_pst_spark.sources.mspst.datasource import (
-    CLASS_FILTER,
-    table_schema,
-)
+from duckdb_pst_spark.sources.mspst.datasource import table_schema
 
 TABLES = (
     "folders",
@@ -59,33 +59,20 @@ def register_pst_views(spark: SparkSession, path: str, prefix: str = "pst_") -> 
 
 
 def _scan_rows(table, path, read_limit, read_body_size_bytes, read_attachment_body):
-    """Shared UDTF scan body: glob → per-file archive → ordered tuples."""
-    from duckdb_pst_spark.sources.mspst.datasource import _tupleize
-    from duckdb_pst_spark.sources.mspst.messaging import PstArchive
+    """Shared UDTF scan body: the DataSource's planner, then its reader,
+    one partition after another — at most ``read_limit`` rows in all."""
+    from duckdb_pst_spark.sources.mspst.datasource import PstReader
 
-    fields = [f.name for f in table_schema(table).fields]
-    want = CLASS_FILTER.get(table)
-    n = 0
-    for f in sorted(globmod.glob(path)):
-        a = PstArchive(f)
-        try:
-            meta = {"pst_path": f, "pst_name": a.display_name, "record_key": a.record_key}
-            if table == "folders":
-                rows = a.folders()
-            else:
-                rows = a.messages(
-                    read_body_size_bytes=read_body_size_bytes,
-                    read_attachment_body=read_attachment_body,
-                )
-            for r in rows:
-                if want is not None and not (r.get("message_class") or "").startswith(want):
-                    continue
-                if read_limit is not None and n >= read_limit:
-                    return
-                yield tuple(_tupleize({**meta, **r}.get(fld)) for fld in fields)
-                n += 1
-        finally:
-            a.close()
+    options = {
+        "path": path,
+        "table": table,
+        "read_limit": read_limit,
+        "read_body_size_bytes": read_body_size_bytes,
+        "read_attachment_body": read_attachment_body,
+    }
+    reader = PstReader(options, table_schema(table))
+    rows = (row for p in reader.partitions() for row in reader.read(p))
+    yield from itertools.islice(rows, read_limit)
 
 
 def register_pst_udtfs(spark: SparkSession) -> None:

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from duckdb_pst_spark import sinks
 from duckdb_pst_spark.plans import introspect as pi
-from duckdb_pst_spark.sources import pst
 from duckdb_pst_spark.tables import table
+from tests import pstwrite
 
 
 def test_export_roundtrip(spark, sf_dir, tmp_path):
@@ -23,7 +23,11 @@ def test_export_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_ingest_pst_archive_partitions_by_class(spark, tmp_path):
-    out = sinks.ingest_pst_archive(spark, str(tmp_path / "lake"))
+    """Whole-archive ingest over a mixed-class written archive: one
+    message_class= directory per class, and the lake holds the same
+    messages and recipients as a format("pst") read."""
+    src = pstwrite.mixed_mailbox(tmp_path / "mixed.pst")
+    out = sinks.ingest_pst_archive(spark, str(tmp_path / "lake"), path_glob=src)
     assert set(out) == {
         "read_pst_folders",
         "read_pst_messages",
@@ -35,17 +39,20 @@ def test_ingest_pst_archive_partitions_by_class(spark, tmp_path):
     }
     mdir = out["read_pst_messages"]
     subdirs = {d for d in os.listdir(mdir) if d.startswith("message_class=")}
-    assert "message_class=IPM.Note" in subdirs and len(subdirs) == 6
+    assert subdirs == {
+        "message_class=IPM.Note", "message_class=IPM.Task", "message_class=IPM.Contact"
+    }
 
     # class filter on the lake layout = directory pruning, and the data
-    # round-trips (nested recipients/attachments included)
+    # round-trips (nested recipients included)
     back = spark.read.parquet(mdir)
-    assert back.filter(F.col("message_class") == "IPM.Task").count() == 3
-    orig = pst.read_pst_messages(spark)
-    assert back.count() == orig.count()
-    a = back.select("node_id", "pst_name", F.explode("recipients").alias("r")).count()
-    b = orig.select("node_id", "pst_name", F.explode("recipients").alias("r")).count()
-    assert a == b
+    assert back.filter(F.col("message_class") == "IPM.Task").count() == 1
+    orig = spark.read.format("pst").load(src)
+    assert back.count() == orig.count() == 3
+    a = back.select("node_id", F.explode("recipients").alias("r")).count()
+    b = orig.select("node_id", F.explode("recipients").alias("r")).count()
+    assert a == b == 3
+    assert spark.read.parquet(out["read_pst_tasks"]).count() == 1
 
 
 def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path):
